@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * and the page scan switches to [[Multistream.readPages]] — one task
   * per bz2 stream instead of one task per (non-splittable) file; the
   * rest of the pipeline is byte-identical (MultistreamSpec's frame
-  * equality). The siteinfo/namespace read stays on the XML source —
-  * the header is stream 0, a single tiny decode.
+  * equality). The namespace table comes from the dump's header either
+  * way ([[MediaWikiXml.readNamespaces]] reads up to `</siteinfo>` only;
+  * in a multistream dump that is stream 0, a single tiny decode).
   */
 object ImportDump {
   def main(args: Array[String]): Unit = {
@@ -39,20 +40,15 @@ object ImportDump {
     spark.sparkContext.setLogLevel("WARN")
 
     val obs = org.apache.spark.sql.Observation("import")
-    // multistream index present -> splittable parallel scan (A15);
-    // header-only namespace decode rides the same index
-    val msIndex = sys.env.get("SPARK_GRAFT_MULTISTREAM_INDEX")
-    val pages = msIndex match {
+    // multistream index present -> splittable parallel scan (A15)
+    val pages = sys.env.get("SPARK_GRAFT_MULTISTREAM_INDEX") match {
       case Some(idx) => Multistream.readPages(spark, dump, idx)
       case None => MediaWikiXml.readPages(spark, dump)
     }
     val flat = MediaWikiXml.flattenRevisions(pages)
       .observe(obs, count(lit(1)).as("revisions"),
         approx_count_distinct(col("page_id")).as("approx_pages"))
-    val ns = msIndex match {
-      case Some(idx) => Multistream.readNamespaces(spark, dump, idx)
-      case None => MediaWikiXml.readNamespaces(spark, dump)
-    }
+    val ns = MediaWikiXml.readNamespaces(spark, dump)
     val classified = MediaWikiXml.verifySha1(MediaWikiXml.classify(flat, ns))
 
     Sinks.writeParquetPartitioned(classified, s"$outDir/revision")

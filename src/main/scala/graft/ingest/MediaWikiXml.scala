@@ -82,12 +82,79 @@ object MediaWikiXml {
       col("_case").as("ns_case"))
 
   /** A2: the `<siteinfo>` namespace map as a lookup table (broadcast
-    * side of every classification join). key=0 has an empty name. */
-  def readNamespaces(spark: SparkSession, path: String): DataFrame =
-    namespaceCols(spark.read.format("xml")
-      .option("rowTag", "namespace")
-      .schema(namespaceSchema)
-      .load(path))
+    * side of every classification join). key=0 has an empty name.
+    *
+    * Reads each file's HEADER only, on the driver: the file opens
+    * through Hadoop's codec factory (so `.xml.bz2` decodes
+    * transparently, and a multistream dump decodes just stream 0), and
+    * the read stops at `</siteinfo>` or the first `<page`. A 20 GB dump
+    * costs the same few KB as the minidump, and no Spark job runs. The
+    * `<namespace>` elements found there are parsed by
+    * `from_xml(namespaceSchema)` + [[namespaceCols]], the parse q214
+    * grades. A directory or glob of chunk files (Wikimedia's
+    * `pages-articlesN.xml-p…`, each repeating the siteinfo) gives ONE
+    * row per key, and fails when the chunks' headers disagree. A
+    * header-less dump gives an empty table. */
+  def readNamespaces(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    val conf = spark.sparkContext.hadoopConfiguration
+    val headers = dumpFiles(conf, path)
+      .map(f => f -> namespaceElem.findAllIn(readHeader(conf, f)).toList)
+      .filter(_._2.nonEmpty)
+    headers.find(_._2 != headers.head._2).foreach { case (f, _) =>
+      throw new IllegalArgumentException(
+        s"dump chunks disagree on <namespaces>: ${headers.head._1} vs $f")
+    }
+    val elems = headers.headOption.fold(List.empty[String])(_._2)
+    namespaceCols(elems.toDF("xml")
+      .select(from_xml(col("xml"), namespaceSchema).as("n")).select(col("n.*")))
+  }
+
+  /** A `<namespace>` element: self-closing or text-bearing. */
+  private val namespaceElem = "<namespace\\b[^>]*(?:/>|>[^<]*</namespace>)".r
+
+  /** The files a reader path names, as Spark's file sources list them:
+    * the path itself, a glob's matches, or a directory's files, hidden
+    * (`_`/`.`-prefixed) names skipped. */
+  private def dumpFiles(conf: org.apache.hadoop.conf.Configuration,
+      path: String): Seq[org.apache.hadoop.fs.Path] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val matched = Option(fs.globStatus(p)).toSeq.flatten
+    require(matched.nonEmpty, s"Path does not exist: $path")
+    matched.flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s))
+      .filter(s => s.isFile && !s.getPath.getName.matches("[_.].*"))
+      .map(_.getPath).sortBy(_.toString)
+  }
+
+  private val headerEnds =
+    Seq("</siteinfo>", "<page").map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** A dump file's text up to and including `</siteinfo>` or the first
+    * `<page`, whichever comes first (the whole file if neither does).
+    * Reads the decoded stream a byte at a time, so a compressed dump is
+    * decoded no further than the header. */
+  private def readHeader(conf: org.apache.hadoop.conf.Configuration,
+      file: org.apache.hadoop.fs.Path): String = {
+    val raw = file.getFileSystem(conf).open(file)
+    val in = Option(new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+      .getCodec(file)).fold[java.io.InputStream](new java.io.BufferedInputStream(raw))(
+        _.createInputStream(raw))
+    try {
+      var buf = new Array[Byte](8192)
+      var n = 0
+      def ended = headerEnds.exists(e => n >= e.length &&
+        java.util.Arrays.equals(buf, n - e.length, n, e, 0, e.length))
+      var b = in.read()
+      while (b >= 0) {
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
+        buf(n) = b.toByte
+        n += 1
+        b = if (ended) -1 else in.read()
+      }
+      new String(buf, 0, n, java.nio.charset.StandardCharsets.UTF_8)
+    } finally in.close()
+  }
 
   /** A3–A8: normalize pages to revision grain with all union/presence
     * decodes applied — the golden flattened schema of FIXTURES.md §2. */

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Splittable ingest of `pages-articles-multistream.xml.bz2` dumps
@@ -16,27 +16,27 @@ import org.apache.spark.sql.functions._
   *    `offset:page_id:title` line per page, `offset` = the byte offset
   *    of the bz2 stream containing that page.
   *
-  * The reader turns the index's distinct offsets into (start, end)
-  * byte ranges — one range per 100-page stream — and decodes ranges in
+  * The reader decodes one bz2 stream per distinct index offset, in
   * parallel: N streams = N independent tasks, so a 20 GB dump ingests
-  * at cluster width instead of one task. Per-stream decode is genuine
-  * per-partition imperative work (the documented mapPartitions
+  * at cluster width instead of one task. A bz2 stream ends itself (its
+  * end-of-stream marker), so no byte range is planned: each task seeks
+  * to its offset and decodes exactly one stream. Per-stream decode is
+  * genuine per-partition imperative work (the documented mapPartitions
   * exception); everything after — schema application, flatten,
   * classify — is the same declarative chain as [[MediaWikiXml]], via
   * `from_xml` with the SAME declared [[MediaWikiXml.pageSchema]], so
   * the multistream path produces the identical flattened frame as the
-  * single-stream `spark.read.format("xml")` path (IngestSpec proves
-  * frame equality on a 3-stream fixture).
+  * single-stream `spark.read.format("xml")` path (MultistreamSpec
+  * proves frame equality on a 3-stream fixture).
   *
-  * 100 TB notes: the index is ~1% of the dump and is read once; the
-  * range list is built DISTRIBUTIVELY and stays a Dataset end to end
-  * (r16 — a full-history enwiki index is ~10M distinct offsets, too
-  * many to collect): the only driver materialization on the ingest
-  * path is one boundary row per partition. Each decode task opens the
-  * dump file at its own offset (HDFS/S3 positioned read) and never
-  * touches another task's range, so ingest scales with stream count. The trailing data range deliberately runs to EOF and decodes
-  * the concatenated footer stream too (`</mediawiki>` carries no
-  * `<page>`, so it contributes nothing).
+  * 100 TB notes: the index is ~1% of the dump and is read once, as a
+  * Dataset end to end — its distinct offsets (~10M for a full-history
+  * enwiki index) are never collected, and the reader runs no job when
+  * called. Each decode task opens the dump at its own offset (HDFS/S3
+  * positioned read) and never touches another task's stream, so ingest
+  * scales with stream count. Streams the index does not list (the
+  * header, the `</mediawiki>` footer) are never decoded by the page
+  * read; the header is read by [[readNamespaces]].
   */
 object Multistream {
 
@@ -49,8 +49,8 @@ object Multistream {
       .toDF("line")
       .filter(length(trim(col("line"))) > 0)
       // a corrupt line would regexp_extract to '' → cast to null →
-      // NPE deep in streamRanges' collect; drop it here instead so a
-      // single bad index line can't abort the whole ingest opaquely
+      // NPE deep in a decode task; drop it here instead so a single
+      // bad index line can't abort the whole ingest opaquely
       .filter(col("line").rlike("^\\d+:\\d+:"))
       .select(
         regexp_extract(col("line"), "^(\\d+):(\\d+):(.*)$", 1)
@@ -59,139 +59,59 @@ object Multistream {
           .cast("long").as("page_id"),
         regexp_extract(col("line"), "^(\\d+):(\\d+):(.*)$", 3).as("title"))
 
-  private def dumpLen(spark: SparkSession, dumpPath: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dumpPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.getFileStatus(new org.apache.hadoop.fs.Path(dumpPath)).getLen
-  }
-
-  /** The distinct stream byte ranges [start, end) the index implies,
-    * built DISTRIBUTIVELY (VERDICT_r15 #6 — the old driver-side
-    * `.collect()` of every distinct offset was ~N/100 rows, i.e. ~10M
-    * offsets for a full-history enwiki dump): each range's end is its
-    * offset's successor, so the offsets range-partition by value, each
-    * partition pairs its own sorted run with one element of lookahead
-    * (the documented per-partition imperative exception), and the only
-    * driver materialization is ONE first-offset row per partition
-    * (bounded by the partition count, never the index size) to stitch
-    * the partition boundaries. The last data stream runs to file
-    * length — decoding the concatenated footer with it is harmless (no
-    * `<page>` inside). */
-  def streamRangesDS(spark: SparkSession, dumpPath: String,
-      indexPath: String): Dataset[(Long, Long)] = {
-    import spark.implicits._
-    val fileLen = dumpLen(spark, dumpPath)
-    val parts = math.max(1, spark.sparkContext.defaultParallelism)
-    val sorted = readIndex(spark, indexPath)
-      .select(col("stream_offset")).distinct().as[Long]
-      .repartitionByRange(parts, col("stream_offset"))
-      .sortWithinPartitions(col("stream_offset"))
-    val rdd = sorted.rdd
-    // one row per non-empty partition: (partition index, its first
-    // offset) — the bounded boundary exchange
-    val firsts: Map[Int, Long] = rdd
-      .mapPartitionsWithIndex((i, it) =>
-        if (it.hasNext) Iterator.single((i, it.next())) else Iterator.empty)
-      .collect().toMap
-    val ranges = rdd.mapPartitionsWithIndex { (i, it) =>
-      // the offset AFTER this partition's last = the first offset of
-      // the next non-empty partition (range partitioning orders
-      // partitions by value), or EOF for the global last
-      val boundary = firsts.keys.filter(_ > i).toSeq.sorted.headOption
-        .map(firsts).getOrElse(fileLen)
-      new Iterator[(Long, Long)] {
-        private var cur: Option[Long] =
-          if (it.hasNext) Some(it.next()) else None
-        def hasNext: Boolean = cur.isDefined
-        def next(): (Long, Long) = {
-          val s = cur.get
-          val e =
-            if (it.hasNext) { val n = it.next(); cur = Some(n); n }
-            else { cur = None; boundary }
-          (s, e)
-        }
-      }
-    }
-    spark.createDataset(ranges)
-  }
-
-  /** Driver-side convenience over [[streamRangesDS]] — FIXTURE-SCALE
-    * use (specs, the header probe): collects the full range list. The
-    * ingest path itself never materializes it ([[readPages]] maps over
-    * the Dataset). */
+  /** The byte ranges [start, end) of the streams the index lists: each
+    * ends where the next listed stream starts, the last at end of file.
+    * A driver-side helper for fixtures and stream counts — it collects
+    * every distinct offset; the page read itself plans no ranges. */
   def streamRanges(spark: SparkSession, dumpPath: String,
-      indexPath: String): Seq[(Long, Long)] =
-    streamRangesDS(spark, dumpPath, indexPath)
-      .collect().sortBy(_._1).toSeq
-
-  /** Open one bz2 stream range as a decoding Reader — nothing is
-    * buffered beyond the decompressor's block: the compressed bytes
-    * stream straight off the positioned FS read (bounded to the
-    * range), and concatenated streams inside the range (the
-    * EOF-trailing footer) decode too via the
-    * `decompressConcatenated` flag. Takes the job's Hadoop conf
-    * explicitly so executor-side opens see the driver's filesystem
-    * settings (S3/ABFS credentials, fs.defaultFS) instead of an
-    * empty `new Configuration()`. */
-  private def openRange(conf: org.apache.hadoop.conf.Configuration,
-      dumpPath: String, start: Long, end: Long): java.io.Reader = {
+      indexPath: String): Seq[(Long, Long)] = {
+    import spark.implicits._
+    val starts = readIndex(spark, indexPath).select(col("stream_offset"))
+      .distinct().as[Long].collect().sorted.toSeq
     val path = new org.apache.hadoop.fs.Path(dumpPath)
-    val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    in.seek(start)
-    val bounded = new java.io.FilterInputStream(in) {
-      private var left = end - start
-      override def read(): Int =
-        if (left <= 0) -1
-        else { val b = super.read(); if (b >= 0) left -= 1; b }
-      override def read(buf: Array[Byte], off: Int, len: Int): Int = {
-        if (left <= 0) return -1
-        val n = super.read(buf, off, math.min(len.toLong, left).toInt)
-        if (n > 0) left -= n
-        n
-      }
-    }
-    val bz = new org.apache.commons.compress.compressors.bzip2
-      .BZip2CompressorInputStream(bounded, true)
-    new java.io.InputStreamReader(bz, java.nio.charset.StandardCharsets.UTF_8)
+    val fileLen = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(path).getLen
+    starts.zip(starts.drop(1) :+ fileLen)
   }
 
-  /** Decode one bz2 stream range into a String — header-stream use
-    * only (the siteinfo stream is one small bz2 block by format). The
-    * page path never materializes a stream: see [[streamPagesRange]]. */
-  private def decodeRange(conf: org.apache.hadoop.conf.Configuration,
-      dumpPath: String, start: Long, end: Long): String = {
-    val r = openRange(conf, dumpPath, start, end)
-    try {
-      val sb = new java.lang.StringBuilder
-      val chunk = new Array[Char](64 * 1024)
-      var n = r.read(chunk)
-      while (n >= 0) { sb.append(chunk, 0, n); n = r.read(chunk) }
-      sb.toString
-    } finally r.close()
-  }
-
-  /** Bounded-memory page iterator over one bz2 stream range: decode
-    * and scan in one pass, emitting each `<page>…</page>` as found and
-    * compacting the scan buffer behind it. Peak allocation is one page
-    * plus a 64 KiB read chunk — a pathological million-page stream
-    * costs the same memory as a 100-page one (VERDICT r12 #7). Closes
-    * the underlying FS stream on exhaustion or failure. */
-  private[graft] def streamPagesRange(
-      conf: org.apache.hadoop.conf.Configuration,
-      dumpPath: String, start: Long, end: Long): Iterator[String] = {
-    val reader = openRange(conf, dumpPath, start, end)
+  /** Bounded-memory page iterator over the ONE bz2 stream that starts
+    * at `offset`: decode and scan in one pass, emitting each
+    * `<page>…</page>` as found and compacting the scan buffer behind
+    * it. Peak allocation is one page plus a 64 KiB read chunk — a
+    * pathological million-page stream costs the same memory as a
+    * 100-page one (VERDICT r12 #7). The decoder stops at the stream's
+    * own end marker (`decompressConcatenated = false`), so the next
+    * stream is never read. Takes the job's Hadoop conf explicitly so
+    * executor-side opens see the driver's filesystem settings (S3/ABFS
+    * credentials, fs.defaultFS) instead of an empty
+    * `new Configuration()`. Closes the FS stream on exhaustion or
+    * failure; a failure names the offset and the dump. */
+  private def streamPages(conf: org.apache.hadoop.conf.Configuration,
+      dumpPath: String, offset: Long): Iterator[String] = {
+    def failed(e: Throwable) = new java.io.IOException(
+      s"cannot decode the bz2 stream at offset $offset of $dumpPath: ${e.getMessage}", e)
+    val path = new org.apache.hadoop.fs.Path(dumpPath)
+    val in = path.getFileSystem(conf).open(path)
+    val reader =
+      try {
+        in.seek(offset)
+        new java.io.InputStreamReader(
+          new org.apache.commons.compress.compressors.bzip2
+            .BZip2CompressorInputStream(in, false),
+          java.nio.charset.StandardCharsets.UTF_8)
+      } catch { case e: Throwable => in.close(); throw failed(e) }
     var closed = false
     def closeNow(): Unit = if (!closed) { closed = true; reader.close() }
+    def guarded[T](body: => T): T =
+      try body catch { case e: Throwable => closeNow(); throw failed(e) }
     val it = splitPagesStream(reader)
     new Iterator[String] {
       def hasNext: Boolean = {
-        val h = try it.hasNext catch { case e: Throwable => closeNow(); throw e }
+        val h = guarded(it.hasNext)
         if (!h) closeNow()
         h
       }
-      def next(): String =
-        try it.next() catch { case e: Throwable => closeNow(); throw e }
+      def next(): String = guarded(it.next())
     }
   }
 
@@ -254,66 +174,36 @@ object Multistream {
       }
     }
 
-  /** A2-multistream: the `<siteinfo>` namespace map from the HEADER
-    * stream only — byte range [0, first index offset), one tiny
-    * decode, never the whole dump (the XML source on a multistream
-    * file would decode every stream just to find the header's
-    * namespace tags). Output matches [[MediaWikiXml.readNamespaces]]
-    * column-for-column. */
+  /** A2-multistream: the `<siteinfo>` namespace map. Stream 0 is the
+    * header, so this is [[MediaWikiXml.readNamespaces]] on the dump
+    * itself: its header-only read decodes stream 0 up to
+    * `</siteinfo>` and never the page streams. The index is not read;
+    * the parameter keeps the reader pair's signatures aligned. */
   def readNamespaces(spark: SparkSession, dumpPath: String,
-      indexPath: String): DataFrame = {
-    import spark.implicits._
-    // header bound = the SMALLEST index offset — a 1-row aggregate,
-    // never the full offset list (r16: the old head-of-collected-list
-    // materialized every range to read one number)
-    val firstRow = readIndex(spark, indexPath)
-      .agg(min(col("stream_offset"))).collect()(0)
-    require(!firstRow.isNullAt(0), s"empty multistream index: $indexPath")
-    val firstOffset = firstRow.getLong(0)
-    val header = decodeRange(spark.sparkContext.hadoopConfiguration,
-      dumpPath, 0L, firstOffset)
-    // namespace elements are self-closing or text-bearing
-    val elems = "<namespace\\b[^>]*(?:/>|>[^<]*</namespace>)".r
-      .findAllIn(header).toSeq
-    spark.createDataset(elems).toDF("xml")
-      .select(from_xml(col("xml"), org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("_VALUE",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_case",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_key",
-          org.apache.spark.sql.types.LongType)))).as("n"))
-      .select(col("n._key").cast("int").as("ns_key"),
-        coalesce(col("n._VALUE"), lit("")).as("ns_name"),
-        col("n._case").as("ns_case"))
-  }
+      indexPath: String): DataFrame =
+    MediaWikiXml.readNamespaces(spark, dumpPath)
 
   /** A1-multistream: page-grain scan of a multistream dump — the
     * parallel twin of [[MediaWikiXml.readPages]], one task per bz2
-    * stream, identical output schema and rows. */
+    * stream, identical output schema and rows. Lazy: no job runs until
+    * the frame is consumed. */
   def readPages(spark: SparkSession, dumpPath: String,
       indexPath: String): DataFrame = {
     import spark.implicits._
-    // ranges stay a DATASET end to end (VERDICT_r15 #6): the decode
-    // fans out from the distributed range rows — no driver
-    // materialization at any index size. Round-robin the skinny
-    // (start, end) pairs across ~4 waves per core so stream-size skew
-    // (some bz2 streams decode slower) back-fills.
+    // Round-robin the distinct offsets across ~4 waves per core so
+    // stream-size skew (some bz2 streams decode slower) back-fills.
     val slices = math.max(1, spark.sparkContext.defaultParallelism * 4)
-    // ship the DRIVER's Hadoop conf to the range tasks — an
+    // ship the DRIVER's Hadoop conf to the decode tasks — an
     // executor-side `new Configuration()` would drop object-store
-    // credentials/endpoints set on the session and fail after a
-    // successful driver-side range listing
-    val bcConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val confBc = spark.sparkContext.broadcast(bcConf)
-    val pageXml: Dataset[String] =
-      streamRangesDS(spark, dumpPath, indexPath)
-        .repartition(slices)
-        .flatMap { case (s, e) =>
-          streamPagesRange(confBc.value.value, dumpPath, s, e)
-        }
-    pageXml.toDF("xml")
+    // credentials/endpoints set on the session
+    val confBc = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+    readIndex(spark, indexPath).select(col("stream_offset"))
+      .distinct().as[Long]
+      .repartition(slices)
+      .flatMap(offset => streamPages(confBc.value.value, dumpPath, offset))
+      .toDF("xml")
       .select(from_xml(col("xml"), MediaWikiXml.pageSchema).as("p"))
       .select(col("p.*"))
   }

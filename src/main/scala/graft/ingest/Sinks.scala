@@ -14,17 +14,19 @@ import org.apache.spark.sql.DataFrame
 object Sinks {
 
   /** A11: transactional batched load into an RDBMS (Derby embedded in
-    * tests). At 100 TB you'd repartition to the DB's ingest width
-    * first; `batchsize` maps to the reference's per-transaction row
-    * buffer. */
+    * tests). `numPartitions` caps the writer connections: the JDBC
+    * writer coalesces a wider frame to that many tasks without a
+    * shuffle, and a frame with fewer partitions writes with fewer
+    * connections. Size it to the DB's ingest width, not the cluster's;
+    * `batchsize` maps to the reference's per-transaction row buffer. */
   def writeJdbc(df: DataFrame, url: String, table: String,
       batchSize: Int = 1000, numPartitions: Int = 4): Unit =
-    df.repartition(numPartitions)
-      .write.format("jdbc")
+    df.write.format("jdbc")
       .option("url", url)
       .option("dbtable", table)
       .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
       .option("batchsize", batchSize)
+      .option("numPartitions", numPartitions)
       .mode("overwrite")
       .save()
 

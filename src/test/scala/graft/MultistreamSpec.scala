@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
-import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,13 +16,8 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
   private val dumpXml =
     Files.readString(java.nio.file.Paths.get("src/test/resources/minidump.xml"))
 
-  private def bz2(s: String): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new BZip2CompressorOutputStream(bos)
-    out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    bos.toByteArray
-  }
+  private def bz2(s: String): Array[Byte] =
+    NamespaceHeaderSpec.bz2(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
   /** Build the public multistream layout from the minidump: stream 0 =
     * header+siteinfo, then `perStream`-page streams, then the footer
@@ -104,10 +98,42 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
     val (dump, index) = writeFixture(dir, 3)
     val fromHeader = Multistream.readNamespaces(spark, dump, index)
       .orderBy(col("ns_key")).collect().toSeq
-    val fromXml = MediaWikiXml.readNamespaces(
+    val fromXml = NamespaceHeaderSpec.xmlSourceNamespaces(
       spark, "src/test/resources/minidump.xml")
       .orderBy(col("ns_key")).collect().toSeq
     assert(fromHeader === fromXml)
+  }
+
+  test("decode by offset: shuffled index, repeated offset, no footer entry") {
+    val dir = Files.createTempDirectory("msshuffle")
+    val (dump, index) = writeFixture(dir, 3)
+    // the fixture's index never lists the header or footer stream;
+    // reverse it and repeat its first line
+    val lines = Files.readString(Paths.get(index)).linesIterator.toSeq
+    val shuffled = dir.resolve("shuffled-index.txt")
+    Files.writeString(shuffled, (lines.reverse :+ lines.head).mkString("\n") + "\n")
+    val multi = MediaWikiXml.flattenRevisions(
+      Multistream.readPages(spark, dump, shuffled.toString))
+    val single = MediaWikiXml.flattenRevisions(
+      MediaWikiXml.readPages(spark, "src/test/resources/minidump.xml"))
+    assert(multi.schema === single.schema)
+    val key = multi.columns.map(col).toIndexedSeq
+    assert(multi.orderBy(key: _*).collect().toSeq ===
+      single.orderBy(key: _*).collect().toSeq)
+  }
+
+  test("decode by offset: a non-stream offset fails naming offset and dump") {
+    val dir = Files.createTempDirectory("msbadoff")
+    val (dump, index) = writeFixture(dir, 3)
+    val good = Files.readString(Paths.get(index)).linesIterator.next()
+    val badOffset = good.takeWhile(_ != ':').toLong + 1
+    val bad = dir.resolve("bad-index.txt")
+    Files.writeString(bad, s"$good\n$badOffset:99:Nowhere\n")
+    val e = intercept[Exception](Multistream.readPages(spark, dump, bad.toString).count())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(m => m.contains(s"offset $badOffset ") && m.contains(dump)),
+      messages.mkString(" | "))
   }
 
   test("splitPages: exact top-level page extraction") {
