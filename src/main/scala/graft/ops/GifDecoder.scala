@@ -1,8 +1,9 @@
 package graft.ops
 
 /** Pure-JVM GIF (87a/89a) decoder for the multimodal decode tier —
-  * the compressed-palette format next to [[JpegDecoder]]'s baseline
-  * JPEG. Zero native codecs: header + logical-screen parse, palette
+  * the compressed-palette format next to JPEG. It stays hand-written
+  * because the JDK's reader accepts a file with no trailer. Zero
+  * native codecs: header + logical-screen parse, palette
   * read, variable-width LZW with clear/EOI handling, sub-block
   * framing, and the structural walk to the trailer.
   *

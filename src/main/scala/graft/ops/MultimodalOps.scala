@@ -1,5 +1,12 @@
 package graft.ops
 
+import java.io.ByteArrayInputStream
+import javax.imageio.{ImageIO, ImageReader}
+import javax.imageio.event.IIOReadWarningListener
+import javax.imageio.stream.MemoryCacheImageInputStream
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,9 +16,10 @@ import graft.{QueryDef, Tables}
   * columns with typed metadata, decode → feature-extract over
   * mapPartitions.
   *
-  * Decode is two-tier. Payloads in one of the seven pure-JVM-decodable
-  * image formats — binary PPM ("P6"), 24-bit uncompressed BMP, 8-bit
-  * non-interlaced PNG, baseline+progressive JPEG, GIF 87a/89a (LZW),
+  * Decode is two-tier. Payloads in one of seven image formats —
+  * binary PPM ("P6"), 24-bit uncompressed BMP, static PNG, JPEG
+  * (baseline and progressive, read by the JDK's own `javax.imageio`
+  * reader, whose codec is native: `libjavajpeg`), GIF 87a/89a (LZW),
   * lossless WebP ([[WebpDecoder]]: VP8L prefix codes, LZ77,
   * color cache, subtract-green), and lossy WebP keyframes
   * ([[Vp8Decoder]]: RFC 6386 bool decoder, token trees, dequant,
@@ -22,10 +30,12 @@ import graft.{QueryDef, Tables}
   * ([[decodeImage]]: magic sniff, header/entropy parse, per-channel
   * stats), exercised end-to-end on checked-in and generated fixture
   * bytes by MultimodalSpec/JpegDecoderSpec/WebpDecoderSpec/
-  * Vp8DecoderSpec. Everything
-  * else falls back to `decodeStub`, a clearly-marked deterministic
-  * stand-in (byte histogram) for the codecs still outside the pure-JVM
-  * tier (PCM/H.264). Around both tiers sits the real Spark
+  * Vp8DecoderSpec. Every format but JPEG is parsed on the JVM by this
+  * package, because the JDK either has no reader for it (PPM, WebP)
+  * or its reader accepts files the tier must reject (PNG, GIF, BMP).
+  * Everything else falls back to `decodeStub`, a clearly-marked
+  * deterministic stand-in (byte histogram) for the codecs still
+  * outside the tier (PCM/H.264). Around both tiers sits the real Spark
   * plumbing a production pipeline needs and what the tests cover:
   * declared binary schema, partition-local batch processing (one
   * reusable buffer per partition, the mapPartitions analog of a
@@ -98,38 +108,35 @@ object MultimodalOps {
     grid(72 + cell) += 1L
   }
 
+  /** The sniff chain of [[decodeImage]] and [[decodeGrid]], in order.
+    * Each decoder checks its own magic bytes first, and fills the grid
+    * (when given one) from its single stats pass. */
+  private val imageDecoders
+      : Seq[(Array[Byte], Array[Long]) => Option[DecodedImage]] = Seq(
+    decodePpm, decodeBmp, decodePng, decodeJpeg,
+    GifDecoder.decode, WebpDecoder.decode, Vp8Decoder.decode)
+
   /** Pixel-tier decode for [[graft.functions.DHash64]]: the same
     * sniff chain as [[decodeImage]], each attempt on a CLEARED grid
     * (a decoder that fails after partially filling cells must not
     * leak state into the next attempt). True iff some format decoded
     * and the grid holds its luma cells. */
-  private[graft] def decodeGrid(payload: Array[Byte], grid: Array[Long]): Boolean = {
-    def attempt(d: => Option[DecodedImage]): Boolean = {
+  private[graft] def decodeGrid(payload: Array[Byte], grid: Array[Long]): Boolean =
+    imageDecoders.exists { d =>
       java.util.Arrays.fill(grid, 0L)
-      d.isDefined
+      d(payload, grid).isDefined
     }
-    attempt(decodePpm(payload, grid)) || attempt(decodeBmp(payload, grid)) ||
-      attempt(decodePng(payload, grid)) ||
-      attempt(JpegDecoder.decode(payload, grid)) ||
-      attempt(GifDecoder.decode(payload, grid)) ||
-      attempt(WebpDecoder.decode(payload, grid)) ||
-      attempt(Vp8Decoder.decode(payload, grid))
-  }
 
-  /** REAL pure-JVM decode of binary PPM (P6), 24-bit uncompressed
-    * BMP, full static PNG (grey/RGB/palette/grey-alpha/RGBA at every
-    * legal bit depth, non-interlaced and Adam7; zlib inflate via
-    * `java.util.zip.Inflater`), and baseline sequential JPEG
-    * ([[JpegDecoder]]: Huffman + IDCT + 4:2:0/4:2:2/4:4:4 chroma,
-    * zero native codecs). Returns None unless the payload is a
-    * complete well-formed image: a truncated file or a coincidental
-    * magic match must fall back to the histogram tier, never produce
-    * garbage features. */
+  /** REAL decode of binary PPM (P6), 24-bit uncompressed BMP, full
+    * static PNG (grey/RGB/palette/grey-alpha/RGBA at every legal bit
+    * depth, non-interlaced and Adam7; zlib inflate via
+    * `java.util.zip.Inflater`), JPEG (baseline and progressive through
+    * the JDK's ImageIO reader, [[decodeJpeg]]), GIF and WebP. Returns
+    * None unless the payload is a complete well-formed image: a
+    * truncated file or a coincidental magic match must fall back to
+    * the histogram tier, never produce garbage features. */
   private[graft] def decodeImage(payload: Array[Byte]): Option[DecodedImage] =
-    decodePpm(payload).orElse(decodeBmp(payload)).orElse(decodePng(payload))
-      .orElse(JpegDecoder.decode(payload)).orElse(GifDecoder.decode(payload))
-      .orElse(WebpDecoder.decode(payload))
-      .orElse(Vp8Decoder.decode(payload))
+    imageDecoders.iterator.flatMap(d => d(payload, null)).nextOption()
 
   private def decodePpm(p: Array[Byte], grid: Array[Long] = null): Option[DecodedImage] = {
     if (p.length < 2 || p(0) != 'P'.toByte || p(1) != '6'.toByte) return None
@@ -421,6 +428,59 @@ object MultimodalOps {
     Some(DecodedImage(w, h, sr / n, sg / n, sb / n))
   }
 
+  /** JPEG through the JDK's own reader: baseline and progressive DCT,
+    * grey or YCbCr at any chroma subsampling, restart intervals. The
+    * SOI sniff (`FF D8`) runs first, so no other payload pays for a
+    * reader (valid UTF-8 text never contains `0xFF`). The bytes are
+    * read through a `MemoryCacheImageInputStream`: with ImageIO's
+    * default `useCache`, `ImageIO.createImageInputStream` would write a
+    * temp file per decode. Any reader warning rejects the payload, as
+    * any exception does: the reader returns a full-size image from a
+    * truncated file or one without EOI and only warns.
+    *
+    * The stats pass reads 1-band rasters as samples: `getRGB` would
+    * push grey through a linear→sRGB conversion. The decode is
+    * deterministic within one JDK build; the reader promises no
+    * bit-identical pixels across builds. */
+  private def decodeJpeg(p: Array[Byte], grid: Array[Long] = null): Option[DecodedImage] = {
+    if (p.length < 4 || (p(0) & 0xff) != 0xff || (p(1) & 0xff) != 0xd8) return None
+    val reader = ImageIO.getImageReadersByFormatName("jpeg").next()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(p))
+    var warned = false
+    reader.addIIOReadWarningListener(new IIOReadWarningListener {
+      def warningOccurred(source: ImageReader, warning: String): Unit = warned = true
+    })
+    try {
+      reader.setInput(in, true, true)
+      val img = reader.read(0)
+      if (warned) return None
+      val w = img.getWidth; val h = img.getHeight
+      val raster = img.getRaster
+      val grey = raster.getNumBands == 1
+      val row = new Array[Int](w)
+      var sr = 0L; var sg = 0L; var sb = 0L
+      var y = 0
+      while (y < h) {
+        if (grey) raster.getSamples(0, y, w, 1, 0, row)
+        else img.getRGB(0, y, w, 1, row, 0, w)
+        var x = 0
+        while (x < w) {
+          val v = row(x)
+          val r = if (grey) v else (v >> 16) & 0xff
+          val g = if (grey) v else (v >> 8) & 0xff
+          val b = if (grey) v else v & 0xff
+          sr += r; sg += g; sb += b
+          if (grid != null) gridAdd(grid, x, y, w, h, r, g, b)
+          x += 1
+        }
+        y += 1
+      }
+      val n = w.toDouble * h
+      Some(DecodedImage(w, h, sr / n, sg / n, sb / n))
+    } catch { case NonFatal(_) => None }
+    finally { reader.dispose(); in.close() }
+  }
+
   /** Decoded-audio surface of [[decodeAudio]]: per-channel DC mean
     * (signed sample domain), RMS, and zero-crossing counts — the
     * cheap fingerprint features an audio curation pass keys on. */
@@ -629,7 +689,7 @@ object MultimodalOps {
     * over the image-modality binary column, the q105 SimHash
     * machinery pointed at pixels instead of tokens. Every real
     * multimodal corpus dedups re-encoded frames; the pixel tier of
-    * [[graft.functions.DHash64]] hashes what the six pure-JVM
+    * [[graft.functions.DHash64]] hashes what the seven image
     * decoders see (spec-graded: PerceptualDHashSpec proves a
     * one-pixel edit moves ≤ 2 bits and the banded join equals a
     * brute-force Hamming scan), while this graded instance runs the

@@ -766,7 +766,8 @@ object VectorOps {
     * any corpus size (q208's report references its assignments through
     * 3 levels of nesting, so each removed exchange was being paid
     * several times per invocation). Emits (vec_id, embedding, score,
-    * label). */
+    * label); an empty quantizer emits no rows (`array_min` of `[]` is
+    * null), as the windowed argmin does. */
   private def argminMapOnly(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val centArr = cents
       .agg(collect_list(struct(col("label"), col("cv"), col("cnorm")))
@@ -778,6 +779,7 @@ object VectorOps {
             lit(2.0) * dotFast(col("embedding"), c.getField("cv")))
             .as("score"),
           c.getField("label").as("label")))))
+      .filter(col("__best").isNotNull)
       .withColumn("score", col("__best").getField("score"))
       .withColumn("label", col("__best").getField("label"))
       .drop("__cents", "__best")

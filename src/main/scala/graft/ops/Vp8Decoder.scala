@@ -1168,9 +1168,9 @@ object Vp8Decoder {
   }
 
   /** Pixel-tier decode of a lossy-WebP payload: full keyframe
-    * reconstruction, BT.601 studio-swing YUV→RGB (the same convention
-    * as [[JpegDecoder]]'s inverse), nearest chroma upsample; fills the
-    * dHash grid when given and returns the RGB means. */
+    * reconstruction, BT.601 studio-swing YUV→RGB, nearest chroma
+    * upsample; fills the dHash grid when given and returns the RGB
+    * means. */
   def decode(p: Array[Byte],
       grid: Array[Long] = null): Option[MultimodalOps.DecodedImage] =
     try {

@@ -2,23 +2,30 @@ package graft
 
 import java.awt.image.BufferedImage
 import java.io.ByteArrayOutputStream
+import java.nio.file.{Files, StandardWatchEventKinds}
+import java.util.concurrent.TimeUnit
 
 import javax.imageio.stream.MemoryCacheImageOutputStream
 import javax.imageio.{IIOImage, ImageIO, ImageWriteParam}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{JpegDecoder, MultimodalOps}
+import graft.ops.MultimodalOps
 
-/** Cross-checks the pure-JVM baseline JPEG decoder against the JDK's
-  * ImageIO codec as an INDEPENDENT reference implementation: ImageIO
-  * encodes synthetic images (default writer = baseline SOF0 with
-  * 4:2:0 chroma), both decoders read the same bytes, and the channel
-  * means must agree within a small tolerance (JPEG decode is not
-  * bit-specified across implementations — IDCT rounding and chroma
-  * upsampling legitimately differ — but means over a whole image pin
-  * the decode to well under one 8-bit step). ImageIO stays test-only:
-  * executors never touch java.desktop. */
+/** The JPEG path of [[MultimodalOps.decodeImage]], which reads JPEG
+  * through the JDK's ImageIO reader. ImageIO's writer encodes
+  * synthetic images (default writer = baseline SOF0 with 4:2:0
+  * chroma; progressive SOF2 on request), and the tier decodes them.
+  *
+  * `assertClose` compares the tier's channel means with `ImageIO.read`
+  * plus this spec's own stats walk. Both sides run the same JDK
+  * reader, so this is no independent check of the JPEG decode itself:
+  * it pins the tier's stats walk (grey read as raster samples, RGB
+  * channel order, the means) and the dispatch to the reader; its
+  * tolerances are not to be widened. The cases that carry the weight
+  * are the rejections (every truncated or corrupt payload must give
+  * None, never a partial image) and the hand-built DRI stream, whose
+  * pixel value is derived by hand. */
 class JpegDecoderSpec extends AnyFunSuite {
 
   /** Deterministic RGB test card: gradients + a high-frequency block
@@ -69,8 +76,8 @@ class JpegDecoderSpec extends AnyFunSuite {
   }
 
   private def assertClose(bytes: Array[Byte], tol: Double): Unit = {
-    val got = JpegDecoder.decode(bytes)
-    assert(got.isDefined, "decoder rejected a valid baseline JPEG")
+    val got = MultimodalOps.decodeImage(bytes)
+    assert(got.isDefined, "decoder rejected a valid JPEG")
     val d = got.get
     val (er, eg, eb) = imageIoMeans(bytes)
     assert(math.abs(d.meanR - er) <= tol, s"meanR ${d.meanR} vs $er")
@@ -80,7 +87,7 @@ class JpegDecoderSpec extends AnyFunSuite {
 
   test("4:2:0 chroma (the ImageIO default), dims not multiples of 16") {
     val bytes = encode(testImage(37, 23), 0.85f)
-    val d = JpegDecoder.decode(bytes).get
+    val d = MultimodalOps.decodeImage(bytes).get
     assert(d.width === 37 && d.height === 23)
     assertClose(bytes, 1.5)
   }
@@ -95,7 +102,7 @@ class JpegDecoderSpec extends AnyFunSuite {
     val gray = new BufferedImage(32, 32, BufferedImage.TYPE_BYTE_GRAY)
     gray.getGraphics.drawImage(src, 0, 0, null)
     val bytes = encode(gray, 0.9f)
-    val d = JpegDecoder.decode(bytes).get
+    val d = MultimodalOps.decodeImage(bytes).get
     assert(d.width === 32 && d.height === 32)
     assert(d.meanR === d.meanG && d.meanG === d.meanB)
     assertClose(bytes, 1.5)
@@ -103,16 +110,16 @@ class JpegDecoderSpec extends AnyFunSuite {
 
   test("decode is deterministic (bit-identical repeat)") {
     val bytes = encode(testImage(41, 17), 0.8f)
-    val a = JpegDecoder.decode(bytes).get
-    val b = JpegDecoder.decode(bytes).get
+    val a = MultimodalOps.decodeImage(bytes).get
+    val b = MultimodalOps.decodeImage(bytes).get
     assert(a === b)
   }
 
   test("truncated and corrupt payloads return None, never garbage") {
     val bytes = encode(testImage(48, 48), 0.85f)
-    assert(JpegDecoder.decode(bytes.take(bytes.length / 2)) === None)
-    assert(JpegDecoder.decode(bytes.take(20)) === None)
-    assert(JpegDecoder.decode(Array[Byte](0xff.toByte, 0xd8.toByte)) === None)
+    assert(MultimodalOps.decodeImage(bytes.take(bytes.length / 2)) === None)
+    assert(MultimodalOps.decodeImage(bytes.take(20)) === None)
+    assert(MultimodalOps.decodeImage(Array[Byte](0xff.toByte, 0xd8.toByte)) === None)
     // flip a marker byte inside the header region to an invalid SOF
     val corrupt = bytes.clone()
     val sof = {
@@ -121,7 +128,7 @@ class JpegDecoderSpec extends AnyFunSuite {
       i
     }
     corrupt(sof + 1) = 0xc2.toByte // pretend progressive
-    assert(JpegDecoder.decode(corrupt) === None)
+    assert(MultimodalOps.decodeImage(corrupt) === None)
   }
 
   private def encodeProg(img: BufferedImage, quality: Float): Array[Byte] = {
@@ -159,7 +166,7 @@ class JpegDecoderSpec extends AnyFunSuite {
       (64, 48, 0.30f, 3.0), (41, 17, 0.8f, 2.0))) {
       val bytes = encodeProg(testImage(w, h), q)
       assertSof2(bytes)
-      val d = JpegDecoder.decode(bytes)
+      val d = MultimodalOps.decodeImage(bytes)
       assert(d.isDefined, s"progressive ${w}x$h q=$q rejected")
       assert(d.get.width === w && d.get.height === h)
       assertClose(bytes, tol)
@@ -172,7 +179,7 @@ class JpegDecoderSpec extends AnyFunSuite {
     gray.getGraphics.drawImage(src, 0, 0, null)
     val bytes = encodeProg(gray, 0.9f)
     assertSof2(bytes)
-    val d = JpegDecoder.decode(bytes).get
+    val d = MultimodalOps.decodeImage(bytes).get
     assert(d.width === 32 && d.height === 32)
     assert(d.meanR === d.meanG && d.meanG === d.meanB)
     assertClose(bytes, 1.5)
@@ -181,21 +188,51 @@ class JpegDecoderSpec extends AnyFunSuite {
   test("progressive decode is deterministic and rejects truncation") {
     val bytes = encodeProg(testImage(48, 48), 0.85f)
     assertSof2(bytes)
-    val a = JpegDecoder.decode(bytes).get
-    val b = JpegDecoder.decode(bytes).get
+    val a = MultimodalOps.decodeImage(bytes).get
+    val b = MultimodalOps.decodeImage(bytes).get
     assert(a === b)
     // cutting anywhere in the scan chain must reject, never partially
     // decode: a progressive file whose REFINEMENT scans are missing is
     // structurally truncated
     for (cut <- Seq(bytes.length / 4, bytes.length / 2, bytes.length - 2))
-      assert(JpegDecoder.decode(bytes.take(cut)) === None, s"cut at $cut")
+      assert(MultimodalOps.decodeImage(bytes.take(cut)) === None, s"cut at $cut")
   }
 
   test("decodeImage dispatches JPEG through the real tier") {
     val bytes = encode(testImage(24, 24), 0.9f)
     val viaDispatch = MultimodalOps.decodeImage(bytes)
     assert(viaDispatch.isDefined)
-    assert(viaDispatch.get === JpegDecoder.decode(bytes).get)
+    val d = viaDispatch.get
+    assert(d.width === 24 && d.height === 24)
+    assert((d.meanR, d.meanG, d.meanB) === imageIoMeans(bytes))
+    // the dHash pixel tier takes the same path: every pixel lands in
+    // the grid's counts
+    val grid = new Array[Long](144)
+    assert(MultimodalOps.decodeGrid(bytes, grid))
+    assert(grid.drop(72).sum === 24L * 24)
+  }
+
+  test("a JPEG decode writes no file to ImageIO's cache directory") {
+    val bytes = encode(testImage(48, 48), 0.85f)
+    val dir = Files.createTempDirectory("imageio-cache")
+    val (useCache, cacheDir) = (ImageIO.getUseCache, ImageIO.getCacheDirectory)
+    val watcher = dir.getFileSystem.newWatchService()
+    try {
+      ImageIO.setUseCache(true)
+      ImageIO.setCacheDirectory(dir.toFile)
+      dir.register(watcher, StandardWatchEventKinds.ENTRY_CREATE)
+      assert(MultimodalOps.decodeImage(bytes).isDefined)
+      // a file-backed stream deletes its temp file on close, so watch
+      // for the creation, not only for what is left behind
+      assert(watcher.poll(1, TimeUnit.SECONDS) === null, "a cache file was created")
+      assert(dir.toFile.list().isEmpty)
+    } finally {
+      watcher.close()
+      ImageIO.setUseCache(useCache)
+      ImageIO.setCacheDirectory(cacheDir)
+      dir.toFile.listFiles().foreach(_.delete())
+      Files.delete(dir)
+    }
   }
 
   test("restart intervals: decoder honors DRI/RSTn") {
@@ -204,11 +241,13 @@ class JpegDecoderSpec extends AnyFunSuite {
     // a DRI-bearing stream from a hand-built minimal JPEG decodes.
     // Build: 16x8, grayscale, restart after every MCU (interval 1).
     val bytes = MinimalJpeg.grayWithRestarts()
-    val d = JpegDecoder.decode(bytes)
+    val d = MultimodalOps.decodeImage(bytes)
     assert(d.isDefined, "DRI stream rejected")
     assert(d.get.width === 16 && d.get.height === 8)
-    // two flat 8x8 blocks: left DC -> 128+8=136... value checked via
-    // ImageIO agreement instead of hand-derivation
+    // two flat 8x8 blocks, each coded as DC diff 8 (quant 1): the IDCT
+    // gives 8/8 + 128 = 129 per pixel. Without the predictor reset at
+    // RST0 the right block would read DC 16, i.e. 130.
+    assert(d.get.meanR === 129.0 && d.get.meanG === 129.0 && d.get.meanB === 129.0)
     val (er, eg, eb) = imageIoMeans(bytes)
     assert(math.abs(d.get.meanR - er) <= 1.0)
     assert(math.abs(d.get.meanG - eg) <= 1.0)

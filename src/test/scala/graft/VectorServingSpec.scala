@@ -128,6 +128,12 @@ class VectorServingSpec extends AnyFunSuite with LocalSparkSuite {
     assert(lloyd.nonEmpty && tr > 0.1)
   }
 
+  test("an empty quantizer assigns no vectors (no null-label rows)") {
+    import graft.ops.VectorOps
+    val none = VectorOps.ivfCentroids(spark, sfDir).limit(0)
+    assert(VectorOps.lloydAssign(spark, sfDir, none).count() === 0)
+  }
+
   test("q156 delta report equals a brute-force old-slice index + full reassignment") {
     // centroids from the OLD slice with the operator's exact-decimal
     // means (per-value DECIMAL(28,8) quantization, double division)
